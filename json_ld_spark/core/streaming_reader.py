@@ -129,6 +129,11 @@ class StreamingReader:
         context = Context(self.options)
         if self.options.expand_context is not None:
             context = context.parse(self.options.expand_context)
+        return iter(self.statements(document, context))
+
+    def statements(self, document: Any, context: Context) -> list[Triple]:
+        """``stream`` under an already-parsed active ``context``: the
+        entry for callers that parse one context for many documents."""
         out: list[Triple] = []
 
         def emit(st: Triple) -> None:
@@ -142,7 +147,7 @@ class StreamingReader:
 
         self.parse_object(document, None, context, emit,
                           graph_is_named=False)
-        return iter(out)
+        return out
 
     # -- parse_object (streaming_reader.rb:74-423) -------------------------
 

@@ -1,18 +1,23 @@
 """Spark operators for the KG pipeline: turn → JSON-LD document →
-expanded → node map → (subj, pred, obj) triples.
+(subj, pred, obj) triples.
 
 Execution shape (SURVEY §3.1 Spark equivalent):
     read transcripts
       → window row_number/lead over (conv_id, turn_idx)   [stable order]
-      → mapInPandas(build doc + mention detect + expand + toRDF)
-      → triples DataFrame → global dedup of cross-turn nodes
+      → mapInPandas(_emit_turn_batches: mention detect + build doc
+                    + per-document emitter)
+      → triples DataFrame, Conversation triples deduped per partition
       → write (bucketed by conv_id)
 
-The UDF stage is embarrassingly parallel per turn — the reference's own
-streaming reader (streaming_reader.rb:29-54) is the license: triple
-emission never needs cross-document state. Blank nodes get
-per-document deterministic labels (utils.rb:283-310 adapted: namer
-prefix = conv/turn key) so no global counter exists at 10^12 scale.
+One mapInPandas worker serves both emission paths; only the
+per-document emitter differs (the reference's split,
+streaming_reader.rb:29-54): expand + single-pass toRDF for
+``emit_triples``, the raw streaming key-order reader for
+``emit_triples_streaming_reader``. The worker is embarrassingly
+parallel per turn — triple emission never needs cross-document state.
+Blank nodes get per-document deterministic labels (utils.rb:283-310
+adapted: namer prefix = conv/turn key) so no global counter exists at
+10^12 scale.
 
 All Python execution is Arrow-batched (mapInPandas); mention counting
 is vectorized per surface over each batch (pandas .str.count), not
@@ -22,12 +27,18 @@ per-row.
 from __future__ import annotations
 
 import re
+from functools import partial
 from typing import Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from json_ld_spark.core import api as core_api
+from json_ld_spark.core.context import Options, parse_context_cached
+from json_ld_spark.core.errors import JsonLdError
+from json_ld_spark.core.keywords import BlankNodeNamer
+from json_ld_spark.core.streaming_reader import StreamingReader
 from json_ld_spark.sources.gazetteer import (
     CONV_NS,
     GAZETTEER,
@@ -112,9 +123,7 @@ def entity_iri_by_id(eid: int) -> str:
     return _ENTITY_BY_ID[eid]
 
 
-def with_stable_turn_order(
-    transcripts: DataFrame, n_partitions: int | None = None
-) -> DataFrame:
+def with_stable_turn_order(transcripts: DataFrame) -> DataFrame:
     """Stable turn ordering + nextTurn linkage (the north rule's
     window): row_number + lead over (conv_id, turn_idx).
 
@@ -125,9 +134,7 @@ def with_stable_turn_order(
     CPU-heavy stage to one task, serializing the Python emission UDF
     (the per-row cost is Python CPU, invisible to byte-based sizing).
     """
-    if n_partitions is None:
-        sc = transcripts.sparkSession.sparkContext
-        n_partitions = sc.defaultParallelism * 2
+    n_partitions = transcripts.sparkSession.sparkContext.defaultParallelism * 2
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     return transcripts.repartition(n_partitions, "conv_id").select(
         "*",
@@ -136,16 +143,33 @@ def with_stable_turn_order(
     )
 
 
-def _triples_batch_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: Arrow batch of turns → Arrow batch of triples."""
-    # imports inside the worker so the closure pickles cheaply
-    from json_ld_spark.core import api as core_api
-    from json_ld_spark.core.context import parse_context_cached
-    from json_ld_spark.core.errors import JsonLdError
-    from json_ld_spark.core.keywords import BlankNodeNamer
+def _expand_to_rdf(doc: dict, ctx, namer: BlankNodeNamer) -> list:
+    """Document emitter: expand, then the single-pass toRDF emitter
+    (streaming_reader.rb parity): turn docs are trees with only
+    labeled bnodes, so the output is identical to the node-map path,
+    ~30% cheaper."""
+    expanded = core_api.expand_with_context(doc, ctx)
+    return core_api.expanded_to_rdf_stream(expanded, namer=namer)
 
+
+def _streaming_reader_to_rdf(doc: dict, ctx, namer: BlankNodeNamer) -> list:
+    """Document emitter: the RAW streaming key-order reader
+    (core/streaming_reader.py), no expansion. Semantically identical
+    output, because turn documents are built in streaming-profile key
+    order."""
+    reader = StreamingReader()
+    reader.namer = namer
+    return reader.statements(doc, ctx)
+
+
+def _emit_turn_batches(
+    batches: Iterator[pd.DataFrame], emit_doc
+) -> Iterator[pd.DataFrame]:
+    """mapInPandas worker: Arrow batch of turns → Arrow batch of
+    triples. ``emit_doc(doc, ctx, namer)`` turns one turn document into
+    triples; everything else (mention counting, document build, bnode
+    namer, quarantine, row shaping, conv-level dedup) is shared by
+    both emission paths."""
     ctx = parse_context_cached(_NEXT_TURN_CONTEXT)  # once per worker (lru)
     surface_patterns = [
         (eid, surface, re.compile(re.escape(surface)))
@@ -198,11 +222,7 @@ def _triples_batch_iter(
             )
             namer = BlankNodeNamer(prefix=f"{conv_id}t{turn_idx}m")
             try:
-                expanded = core_api.expand_with_context(doc, ctx)
-                # single-pass emitter (streaming_reader.rb parity):
-                # turn docs are trees with only labeled bnodes, so the
-                # output is identical to the node-map path, ~30% cheaper
-                triples = core_api.expanded_to_rdf_stream(expanded, namer=namer)
+                triples = emit_doc(doc, ctx, namer)
             except JsonLdError as e:  # quarantine, never fail the task
                 rows.append(
                     (conv_id, turn_idx, None, None, None, None, None, None,
@@ -247,168 +267,50 @@ def _triples_batch_iter(
         )
 
 
-def emit_triples(
-    transcripts: DataFrame, ordered: bool = True, dedup_scope: str = "conv"
-) -> DataFrame:
-    """Transcripts → triples DataFrame (errors quarantined in-band).
+def emit_triples(transcripts: DataFrame, ordered: bool = True) -> DataFrame:
+    """Transcripts → triples DataFrame (errors quarantined in-band), via
+    expand + toRDF per turn document.
 
     Cross-turn duplicate facts (the Conversation node re-asserted by
-    every turn) are globally deduplicated — the relational half of
+    every turn) are deduplicated — the relational half of
     create_node_map's add_value(allow_duplicate:false) merge
-    (flatten.rb:85,120): per-doc merge in the UDF, global merge on the
-    triple key.
+    (flatten.rb:85,120): per-doc merge in the UDF, cross-doc merge on
+    the triple key. Turn IRIs and mention bnode labels embed
+    (conv_id, turn_idx), so only triples about shared Conversation
+    nodes can repeat.
 
-    dedup_scope:
-      "conv" (default) — only triples about shared Conversation nodes
-        go through the dedup shuffle. Turn IRIs and mention bnode
-        labels embed (conv_id, turn_idx), so every other triple is
-        unique by construction; at 10^12 turns this shrinks the dedup
-        exchange by ~50x (the full-table dropDuplicates was the
-        dominant stage: it shuffled every wide triple row).
-      "full" — dedup everything (for arbitrary documents whose
-        subjects may collide across docs).
+    ordered=True (default): stable turn order + nextTurn links; the
+    conv_id-partitioned exchange puts every turn of a conversation in
+    one worker, which drops repeated Conversation triples
+    partition-locally — nothing shuffles after emission.
+    ordered=False: no ordering window and no nextTurn links (streaming
+    micro-batches); rows are not conv_id-partitioned, so a global
+    dropDuplicates on the triple key does the merge.
     """
     src = with_stable_turn_order(transcripts) if ordered else transcripts.select(
         "*", F.lit(None).cast("int").alias("next_turn_idx")
     )
-    triples = src.mapInPandas(_triples_batch_iter, schema=TRIPLE_SCHEMA)
-    key = ["subj", "pred", "obj_value", "obj_is_iri", "obj_datatype",
-           "obj_language", "graph"]
-    if dedup_scope == "full" or not ordered:
-        # arbitrary docs / un-partitioned streams: global shuffle dedup
-        return triples.dropDuplicates(key)
-    # ordered path: conv_id-partitioned upstream → the UDF already
-    # deduped shared-subject triples partition-locally; nothing shuffles
-    return triples
-
-
-def _stream_batch_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: turns → triples via the RAW streaming
-    key-order reader (core/streaming_reader.py) instead of
-    expand+emit. Semantically identical output (turn documents are
-    emitted in streaming-profile key order); exists so the streaming
-    reader is exercised distributed and under the triple oracle."""
-    from json_ld_spark.core.context import Options, parse_context_cached
-    from json_ld_spark.core.errors import JsonLdError
-    from json_ld_spark.core.keywords import BlankNodeNamer
-    from json_ld_spark.core.streaming_reader import StreamingReader
-    from json_ld_spark.core.to_rdf import (
-        _valid_object,
-        _valid_predicate,
-        _valid_subject,
+    triples = src.mapInPandas(
+        partial(_emit_turn_batches, emit_doc=_expand_to_rdf), schema=TRIPLE_SCHEMA
     )
-
-    ctx = parse_context_cached(_NEXT_TURN_CONTEXT)
-    surface_patterns = [
-        (eid, surface, re.compile(re.escape(surface)))
-        for eid, surface, _ in GAZETTEER
-    ]
-    seen_shared: set = set()
-    options = Options()
-
-    for pdf in batches:
-        ts_str = pdf["ts"].dt.strftime("%Y-%m-%dT%H:%M:%S")
-        texts = pdf["text"].fillna("")
-        count_cols = [
-            (eid, surface, texts.str.count(pattern).tolist())
-            for eid, surface, pattern in surface_patterns
-        ]
-        conv_ids = pdf["conv_id"].tolist()
-        turn_idxs = pdf["turn_idx"].tolist()
-        roles = pdf["role"].tolist()
-        text_vals = pdf["text"].tolist()
-        tools = pdf["tool"].tolist()
-        ts_vals = ts_str.tolist()
-        next_idxs = pdf["next_turn_idx"].tolist()
-        rows: list[tuple] = []
-        for i in range(len(conv_ids)):
-            conv_id = conv_ids[i]
-            turn_idx = int(turn_idxs[i])
-            mentions = [
-                (eid, surface, int(cnts[i]))
-                for eid, surface, cnts in count_cols
-                if cnts[i] > 0
-            ]
-            next_idx = next_idxs[i]
-            doc = build_turn_document(
-                conv_id, turn_idx,
-                roles[i] if pd.notna(roles[i]) else None,
-                text_vals[i] if pd.notna(text_vals[i]) else None,
-                tools[i] if pd.notna(tools[i]) else None,
-                ts_vals[i] if pd.notna(ts_vals[i]) else None,
-                int(next_idx) if pd.notna(next_idx) else None,
-                mentions,
-            )
-            reader = StreamingReader(options)
-            reader.namer = BlankNodeNamer(prefix=f"{conv_id}t{turn_idx}m")
-            out: list = []
-
-            def emit(st) -> None:
-                # same validity filter as StreamingReader.stream()
-                # (parity stream_statement, streaming_reader.rb:48-52):
-                # on malformed input both emission paths must DROP
-                # invalid terms, not write them to the triple table
-                if (
-                    _valid_subject(st.subject)
-                    and _valid_predicate(st.predicate, False)
-                    and _valid_object(st.obj)
-                    and (st.graph is None or _valid_subject(st.graph))
-                ):
-                    out.append(st)
-
-            try:
-                # context pre-parsed once per worker; the doc itself is
-                # @context-free here so parse_object starts at the
-                # type/id states directly
-                reader.parse_object(doc, None, ctx, emit,
-                                    graph_is_named=False)
-            except JsonLdError as e:
-                rows.append(
-                    (conv_id, turn_idx, None, None, None, None, None, None,
-                     None, e.code, str(e))
-                )
-                continue
-            for t in out:
-                subj = ("_:" + t.subject.value) if t.subject.kind == "bnode" else t.subject.value
-                obj_is_iri = t.obj.kind != "literal"
-                obj_value = (
-                    ("_:" + t.obj.value) if t.obj.kind == "bnode" else t.obj.value
-                )
-                if subj.startswith(CONV_NS):
-                    k = (subj, t.predicate.value, obj_value)
-                    if k in seen_shared:
-                        continue
-                    seen_shared.add(k)
-                rows.append(
-                    (
-                        conv_id, turn_idx, subj, t.predicate.value, obj_value,
-                        obj_is_iri,
-                        None if obj_is_iri else t.obj.datatype,
-                        None if obj_is_iri else t.obj.language,
-                        ("_:" + t.graph.value if t.graph.kind == "bnode" else t.graph.value)
-                        if t.graph is not None else None,
-                        None, None,
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "conv_id", "turn_idx", "subj", "pred", "obj_value",
-                "obj_is_iri", "obj_datatype", "obj_language", "graph",
-                "error_code", "error_msg",
-            ],
-        )
+    if ordered:
+        return triples
+    return triples.dropDuplicates(
+        ["subj", "pred", "obj_value", "obj_is_iri", "obj_datatype",
+         "obj_language", "graph"]
+    )
 
 
 def emit_triples_streaming_reader(transcripts: DataFrame) -> DataFrame:
     """Transcripts → triples via the raw streaming key-order reader —
     the alternate single-pass emission path (streaming_reader.rb
-    parity), distributed. Same partition-local conv-level dedup as
-    emit_triples; the driver gates it against the same triple oracle."""
-    src = with_stable_turn_order(transcripts)
-    return src.mapInPandas(_stream_batch_iter, schema=TRIPLE_SCHEMA)
+    parity), distributed. Same worker, ordering and partition-local
+    conv-level dedup as emit_triples; only the per-document emitter
+    differs. The driver gates it against the same triple oracle."""
+    return with_stable_turn_order(transcripts).mapInPandas(
+        partial(_emit_turn_batches, emit_doc=_streaming_reader_to_rdf),
+        schema=TRIPLE_SCHEMA,
+    )
 
 
 EXPAND_SCHEMA = (
@@ -441,10 +343,6 @@ def expand_documents(
 
     def _expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import json as _json
-
-        from json_ld_spark.core import api as core_api
-        from json_ld_spark.core.context import Options
-        from json_ld_spark.core.errors import JsonLdError
 
         options = Options(base=base, contexts=registry)
         for pdf in batches:

@@ -22,13 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_ld_spark.operators import jsonld_ops
-from json_ld_spark.operators.canonicalize import (
-    apply_merge_map,
-    build_merge_map,
-    connected_components,
-    jaccard_filter,
-    minhash_candidate_pairs,
-)
+from json_ld_spark.operators.canonicalize import apply_merge_map, build_merge_map
+from json_ld_spark.operators.dedup import minhash_dedup_components
+from json_ld_spark.sources.transcripts import conv_bucket
 
 LINEAGE_SCHEMA = (
     "stage string, conv_bucket int, status string, triple_count long, "
@@ -54,14 +50,11 @@ def alias_merge_map(
 
         rows = [(entity_iri(suffix), surface) for _, surface, suffix in GAZETTEER]
         aliases = spark.createDataFrame(rows, "entity_iri string, surface string")
-    pairs = minhash_candidate_pairs(
-        aliases, id_col="entity_iri", text_col="surface", num_hashes=32, bands=8
-    )
-    verified = jaccard_filter(
-        pairs, aliases, id_col="entity_iri", text_col="surface", threshold=0.85
-    )
-    comps = connected_components(
-        verified.select("id_a", "id_b"), checkpoint_dir=checkpoint_dir
+    # one shared shingle pass feeds both minhash blocking and the
+    # Jaccard verify, then connected components
+    comps = minhash_dedup_components(
+        aliases, "entity_iri", "surface", num_hashes=32, bands=8,
+        threshold=0.85, checkpoint_dir=checkpoint_dir,
     )
     return build_merge_map(comps)
 
@@ -79,9 +72,7 @@ def run_pipeline(
     triples_path = os.path.join(out_dir, "graph_triples")
     lineage_path = os.path.join(out_dir, "lineage")
 
-    src = transcripts.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(conv_buckets)).cast("int")
-    )
+    src = transcripts.withColumn("conv_bucket", conv_bucket(conv_buckets))
 
     done_buckets: list[int] = []
     if resume and os.path.exists(lineage_path):
@@ -99,9 +90,7 @@ def run_pipeline(
     if canonicalize:
         merge_map = alias_merge_map(spark)
         all_triples = apply_merge_map(all_triples, merge_map)
-    all_triples = all_triples.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(conv_buckets)).cast("int")
-    )
+    all_triples = all_triples.withColumn("conv_bucket", conv_bucket(conv_buckets))
 
     # dynamic partition overwrite: only recomputed buckets are
     # replaced, so a bucket that failed MID-write last run (partial
@@ -113,36 +102,35 @@ def run_pipeline(
         .parquet(triples_path)
     )
 
-    # per-partition lineage + metrics (one scan of the written sink —
-    # counts what actually landed, not what was planned)
+    # per-bucket lineage + metrics from ONE scan of the written sink
+    # (counts what actually landed, not what was planned): at most
+    # conv_buckets rows come back, and the returned totals are their
+    # sums, so the lineage and the result cannot disagree
     written = spark.read.parquet(triples_path)
     if done_buckets:
         written = written.filter(~F.col("conv_bucket").isin(done_buckets))
     wall = time.time() - t0
-    metrics = (
+    per_bucket = (
         written.groupBy("conv_bucket")
         .agg(
             F.count(F.when(F.col("error_code").isNull(), 1)).alias("triple_count"),
             F.count(F.when(F.col("error_code").isNotNull(), 1)).alias("error_count"),
         )
-        .select(
-            F.lit("emit").alias("stage"),
-            "conv_bucket",
-            F.lit("done").alias("status"),
-            "triple_count",
-            "error_count",
-            F.lit(wall).alias("wall_sec"),
-        )
+        .collect()
     )
-    metrics.write.mode("append").parquet(lineage_path)
-
-    totals = written.agg(
-        F.count(F.when(F.col("error_code").isNull(), 1)).alias("triples"),
-        F.count(F.when(F.col("error_code").isNotNull(), 1)).alias("errors"),
-    ).collect()[0]
+    lineage_rows = [
+        ("emit", r["conv_bucket"], "done", r["triple_count"], r["error_count"], wall)
+        for r in per_bucket
+    ]
+    (
+        spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA)
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(lineage_path)
+    )
     return {
-        "triples": totals["triples"],
-        "errors": totals["errors"],
+        "triples": sum(r["triple_count"] for r in per_bucket),
+        "errors": sum(r["error_count"] for r in per_bucket),
         "wall_sec": wall,
         "buckets_skipped": len(done_buckets),
         "out": triples_path,

@@ -20,7 +20,7 @@ row id, so the same seed produces identical bytes at any parallelism):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TRANSCRIPT_SCHEMA = (
@@ -160,18 +160,24 @@ def derive_transcripts_sql(turns_per_conv: int = 5) -> str:
     """
 
 
+def conv_bucket(conv_buckets: int) -> Column:
+    """pmod(xxhash64(conv_id), N) as int: the one definition of a
+    conversation's bucket. The transcript layout and the graph sink's
+    partitions must agree on it, or a resumed run skips or redoes the
+    wrong conversations."""
+    return F.pmod(F.xxhash64("conv_id"), F.lit(conv_buckets)).cast("int")
+
+
 def write_transcripts(
     df: DataFrame, path: str, conv_buckets: int = 16, mode: str = "overwrite"
 ) -> None:
     """Persist transcripts. Iceberg `bucket(conv_id)` when jars are
     available; parquet with a salt-partition column otherwise.
 
-    The salt column pmod(xxhash64(conv_id), N) is the explicit skew
+    The salt column ``conv_bucket`` is the explicit skew
     handle (SURVEY §2.12): downstream readers co-partition on it.
     """
-    out = df.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(conv_buckets))
-    )
+    out = df.withColumn("conv_bucket", conv_bucket(conv_buckets))
     out.write.mode(mode).partitionBy("conv_bucket").parquet(path)
 
 

@@ -57,7 +57,7 @@ def test_emission_partitioning_is_pinned(spark):
     from json_ld_spark.sources.transcripts import synthesize_transcripts
 
     t = synthesize_transcripts(spark, n_convs=5)
-    plan = explain_str(with_stable_turn_order(t, n_partitions=16))
+    plan = explain_str(with_stable_turn_order(t))
     assert "REPARTITION_BY_NUM" in plan or "hashpartitioning(conv_id" in plan
 
 

@@ -167,6 +167,34 @@ def test_pipeline_partial_failure_resume(spark, transcripts, tmp_path):
     )
 
 
+def test_pipeline_counts_reconcile(spark, transcripts, tmp_path):
+    """run_pipeline's totals, the lineage table and the sink agree:
+    triples == sum(lineage.triple_count) == sink rows without an
+    error_code (errors likewise), with one lineage row per bucket."""
+    from json_ld_spark.pipeline import run_pipeline
+
+    out = str(tmp_path / "kg")
+    m = run_pipeline(spark, transcripts, out, conv_buckets=4)
+    sink = spark.read.parquet(out + "/graph_triples")
+    lin = (
+        spark.read.parquet(out + "/lineage")
+        .groupBy("conv_bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("triple_count").alias("t"),
+            F.sum("error_count").alias("e"),
+        )
+        .collect()
+    )
+    sink_buckets = {r["conv_bucket"] for r in sink.select("conv_bucket").distinct().collect()}
+    assert {r["conv_bucket"] for r in lin} == sink_buckets
+    assert all(r["n"] == 1 for r in lin)
+    valid = sink.filter(F.col("error_code").isNull()).count()
+    errors = sink.filter(F.col("error_code").isNotNull()).count()
+    assert m["triples"] == sum(r["t"] for r in lin) == valid > 0
+    assert m["errors"] == sum(r["e"] for r in lin) == errors
+
+
 def test_expand_documents_registry_and_quarantine(spark):
     """Arbitrary docs expand via the vendored-context registry; an
     unregistered remote @context IRI quarantines with the spec code
